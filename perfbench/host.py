@@ -22,6 +22,14 @@ def meminfo_mb() -> dict[str, int]:
     return out
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(all, stolen) CPU ticks of the host so far, from /proc/stat; the
+    stolen share of a window shows how busy the machine's neighbours were."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return sum(fields[:8]), fields[7]
+
+
 def parse_mb(size: str) -> int:
     m = re.fullmatch(r"(\d+)([gGmM])", size)
     if not m:

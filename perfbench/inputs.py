@@ -6,7 +6,8 @@ seed.  Generation always happens outside the timed regions.
 
 A log is a sequence of segments.  Segment ``k`` is one ``gen_bench_log``
 call (seeded from ``(seed, k)``) whose offsets and event times are then
-shifted past those of segment ``k - 1``, so the whole log keeps the
+shifted past those of segment ``k - 1`` (and past ``base``, the events of
+an earlier log the segments follow), so the whole log keeps the
 generator's properties: offsets unique and increasing per source
 partition, about 5% of events out of event-time order, deletes carrying no
 tokens.
@@ -69,25 +70,27 @@ class InputCache:
         shutil.rmtree(scratch, ignore_errors=True)
         return path
 
-    def _segment_path(self, k: int, n_events: int, n_docs: int, key_dist: str) -> str:
-        return os.path.join(self.dir, f"{key_dist}-{n_docs}-{n_events}", f"seg-{k:05d}.parquet")
+    def _segment_path(self, k: int, n_events: int, n_docs: int, key_dist: str,
+                      base: int) -> str:
+        log = f"{key_dist}-{n_docs}-{n_events}" + (f"-after{base}" if base else "")
+        return os.path.join(self.dir, log, f"seg-{k:05d}.parquet")
 
-    def segment(self, k: int, n_events: int, n_docs: int, key_dist: str) -> str:
+    def segment(self, k: int, n_events: int, n_docs: int, key_dist: str, base: int = 0) -> str:
         """Segment ``k`` of the log: ``n_events`` change events over keys
         ``[0, n_docs)``, ``key_dist`` 'uniform' or 'hot' (80% of events on
-        1% of keys)."""
+        1% of keys), with offsets from ``base + k * n_events`` on."""
         if n_events % N_PARTITIONS:
             raise ValueError("segment size must be a multiple of the partition count")
-        path = self._segment_path(k, n_events, n_docs, key_dist)
+        path = self._segment_path(k, n_events, n_docs, key_dist, base)
         if os.path.exists(path):
             return path
         scratch = path + ".gen"
         shutil.rmtree(scratch, ignore_errors=True)
         gen_bench_log(scratch, n_events=n_events, n_docs=n_docs, n_segments=1,
                       n_partitions=N_PARTITIONS, key_dist=key_dist,
-                      mean_len=MEAN_TOKENS, seed=_sub_seed(self.seed, 1, k))
+                      mean_len=MEAN_TOKENS, seed=_sub_seed(self.seed, 1, base, k))
         tbl = pq.read_table(os.path.join(scratch, "seg-00000.parquet"))
-        shift = k * n_events
+        shift = base + k * n_events
         et = tbl["event_time"].cast(pa.int64())
         et = pc.add(et, shift * 1_000_000).cast(tbl.schema.field("event_time").type)
         cols = {

@@ -29,6 +29,7 @@ import os
 import shutil
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -129,27 +130,33 @@ def measure(args, run_dir: str, trace: bool):
     workload, its context, the tracer, the end-to-end metrics, the phase
     walls, the measured window and the metadata bytes written in it."""
     from cfe_39_spark.session import get_spark
-    from host import dir_bytes, nproc, peak_rss_mb
+    from host import cpu_ticks, dir_bytes, nproc, peak_rss_mb
     from spans import Tracer, install
     from workloads import WORKLOADS, Ctx
 
-    spark = wl = None
+    spark = None
     phases = {}
+    tracer = Tracer(trace)
+    ctx = Ctx(None, tracer, run_dir, os.path.join(WORK, "cache"), args.workload,
+              args.seed, args.seconds, args.size, nproc())
+    wl = WORKLOADS[args.workload](ctx)
+    # inputs are generated (or found cached) while the JVM starts
+    pool = ThreadPoolExecutor(1, thread_name_prefix="inputs")
+    gen = pool.submit(wl.inputs)
     try:
         t0 = time.perf_counter()
         spark = get_spark(app_name=f"perfbench-{args.workload}")
         spark.sparkContext.setLogLevel("ERROR")
         spark.range(1).count()
         session_start = time.perf_counter() - t0
+        gen.result()
+        phases["inputs_wait_s"] = time.perf_counter() - t0 - session_start
 
-        tracer = Tracer(trace)
+        ctx.spark = spark
         tracer.session_start_s = session_start
         if trace:
             tracer.sc = spark.sparkContext
             install(tracer)
-        ctx = Ctx(spark, tracer, run_dir, os.path.join(WORK, "cache"), args.workload,
-                  args.seed, args.seconds, args.size, nproc())
-        wl = WORKLOADS[args.workload](ctx)
         parts = {"session_start_s": session_start, **wl.setup()}
         setup_s = sum(parts.values())
         phases.update(parts, setup_wall_s=time.perf_counter() - t0)
@@ -159,10 +166,13 @@ def measure(args, run_dir: str, trace: bool):
         os.sync()  # set-up's writeback must not land on the measured phase
         tracer.phase = "measure"
         t1 = time.perf_counter()
+        ticks0 = cpu_ticks()
         window = (time.time(), None)
         wl.measure()
         window = (window[0], time.time())
         phases["measure_wall_s"] = time.perf_counter() - t1
+        ticks1 = cpu_ticks()
+        phases["measure_steal_frac"] = (ticks1[1] - ticks0[1]) / max(ticks1[0] - ticks0[0], 1)
         tracer.phase = "check"
         meta_bytes = dir_bytes(meta_dir) - meta0
         metrics = wl.finish()
@@ -172,7 +182,8 @@ def measure(args, run_dir: str, trace: bool):
         wl.check()
         phases["check_wall_s"] = time.perf_counter() - t2
     finally:
-        if wl is not None and hasattr(wl, "stop"):
+        pool.shutdown()
+        if spark is not None and hasattr(wl, "stop"):
             try:
                 wl.stop()
             except Exception as e:  # already reported; the JVM must still stop
@@ -235,8 +246,9 @@ def main(argv=None) -> int:
         record = {"workload": args.workload, "seed": args.seed, "seconds": args.seconds,
                   "size": args.size, "trace": args.trace, "host": facts, "metrics": e2e,
                   "attempted": ctx.attempted, "failed": ctx.failed, "phases": phases,
-                  "read_p50": wl.read_p50,
-                  "samples": {"triggers": [t["wall"] for t in wl.triggers], **wl.reads}}
+                  "read_p50": wl.read_p50, "ingest_facts": getattr(wl, "ingest_facts", {}),
+                  "samples": {"triggers": [t["wall"] for t in wl.triggers],
+                              "freshness": wl.fresh, **wl.reads}}
         print(json.dumps(record, sort_keys=True), file=sys.stderr)
         if trace:
             out = per_layer(tracer, wl, run_dir, window, meta_bytes, e2e, tag, record)

@@ -5,7 +5,8 @@
 
 1. Runs every workload at tiny size, untraced and traced, and fails unless
    each prints a correct result carrying exactly the end-to-end (untraced)
-   or per-layer (traced) metrics of BENCHMARK.json, with their units.
+   or per-layer (traced) metrics of BENCHMARK.json, with their units, and
+   trickle_hot's traced run saw a compaction.
 2. Builds a tiny bulk_backfill table, checks it against the oracle, then
    corrupts one data file of a copy and fails unless the oracle flags it.
 3. Runs the benchmark in a directory holding only BENCHMARK.json and the
@@ -60,6 +61,8 @@ def check_results(spec: dict) -> None:
                      f"wrong units {wrong}")
             if trace and "tracing overhead" not in out.stderr:
                 fail(f"{w['name']}: the traced run did not report the tracing overhead")
+            if trace and w["name"] == "trickle_hot" and not res["metrics"]["compact.calls"]["value"]:
+                fail("trickle_hot's measured triggers did not cross a compaction")
             print(f"smoke: {w['name']} trace={trace}: {len(got)} metrics ok", file=sys.stderr)
 
 
@@ -89,6 +92,7 @@ def check_oracle_detects_corruption() -> None:
         ctx = Ctx(spark, Tracer(False), run_dir, os.path.join(run.WORK, "cache"),
                   "bulk_backfill", 7, 4, "tiny", nproc())
         wl = BulkBackfill(ctx)
+        wl.inputs()
         wl.setup()
         for k in range(2):
             wl._apply(wl._segment(k), f"smoke-{k}")

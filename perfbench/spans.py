@@ -49,21 +49,21 @@ LAYER_MAP = {
     "find_batch.busy_s": ("trigger_p50_s", "trickle_hot"),
     "snapshot.calls": ("trigger_p50_s", "trickle_hot"),
     "snapshot.busy_s": ("trigger_p50_s", "trickle_hot"),
-    "compact.calls": ("trigger_p50_s, freshness_p50_s, bytes_per_live_byte", "trickle_hot"),
-    "compact.busy_s": ("trigger_p50_s, freshness_p50_s, bytes_per_live_byte", "trickle_hot"),
-    "compact.max_s": ("trigger_p50_s, freshness_p50_s", "trickle_hot"),
+    "compact.calls": ("ingest_events_per_s, freshness_p50_s, bytes_per_live_byte", "trickle_hot"),
+    "compact.busy_s": ("ingest_events_per_s, freshness_p50_s, bytes_per_live_byte", "trickle_hot"),
+    "compact.max_s": ("ingest_events_per_s, freshness_p50_s", "trickle_hot"),
     "compact.bytes_rewritten": ("bytes_per_live_byte", "trickle_hot"),
-    "read.delta_files_at_call": ("read_p50.scan_p50_s", "all"),
-    "read.busy_s": ("read_p50.scan_p50_s", "all"),
-    "read.bytes_read_per_live_byte": ("read_p50.scan_p50_s", "all"),
-    "read.shuffle_bytes": ("read_p50.scan_p50_s", "all"),
-    "lookup.spark_jobs_per_call": ("read_p50.lookup_p50_s", "all"),
-    "lookup.records_read_per_hit": ("read_p50.lookup_p50_s", "all"),
-    "range.records_read_per_row": ("read_p50.range_p50_s", "all"),
-    "changes.records_read_per_row": ("read_p50.feed_p50_s", "all"),
-    "changelog.spark_jobs_per_call": ("read_p50.changelog_p50_s", "all"),
-    "changelog.records_read_per_row": ("read_p50.changelog_p50_s", "all"),
-    "changelog.shuffle_bytes": ("read_p50.changelog_p50_s", "all"),
+    "read.delta_files_at_call": ("read_p50.scan_p50_s", "bulk_backfill"),
+    "read.busy_s": ("read_p50.scan_p50_s", "bulk_backfill"),
+    "read.bytes_read_per_live_byte": ("read_p50.scan_p50_s", "bulk_backfill"),
+    "read.shuffle_bytes": ("read_p50.scan_p50_s", "bulk_backfill"),
+    "lookup.spark_jobs_per_call": ("read_p50.lookup_p50_s", "bulk_backfill"),
+    "lookup.records_read_per_hit": ("read_p50.lookup_p50_s", "bulk_backfill"),
+    "range.records_read_per_row": ("read_p50.range_p50_s", "bulk_backfill"),
+    "changes.records_read_per_row": ("read_p50.feed_p50_s", "bulk_backfill"),
+    "changelog.spark_jobs_per_call": ("read_p50.changelog_p50_s", "bulk_backfill"),
+    "changelog.records_read_per_row": ("read_p50.changelog_p50_s", "bulk_backfill"),
+    "changelog.shuffle_bytes": ("read_p50.changelog_p50_s", "bulk_backfill"),
     "fs.metadata_writes": ("trigger_p50_s", "trickle_hot"),
     "fs.busy_s": ("trigger_p50_s", "trickle_hot"),
 }
@@ -99,12 +99,22 @@ class Tracer:
         return self._local.stack
 
     @contextlib.contextmanager
+    def quiet(self):
+        """Record no spans on this thread: for the benchmark's own calls
+        into the engine (metadata reads it makes for its records)."""
+        self._local.quiet = True
+        try:
+            yield
+        finally:
+            self._local.quiet = False
+
+    @contextlib.contextmanager
     def span(self, name: str, jobs: bool = False, callback_root: bool = False):
         """Record one span.  ``jobs``: the layer submits Spark jobs, so tag
         them with the layer's job group.  ``callback_root``: spans opened
         on threads with no open span of their own (Spark's foreachBatch
         callbacks) become children of this one."""
-        if not self.enabled:
+        if not self.enabled or getattr(self._local, "quiet", False):
             yield None
             return
         stack = self._stack()
@@ -144,7 +154,7 @@ class Tracer:
 
 def _wrap(tracer: Tracer, owner, attr: str, name: str, outermost: bool = False,
           on_result=None, **span_kw):
-    """Replace ``owner.attr`` by a span-recording wrapper; returns an undo."""
+    """Replace ``owner.attr`` by a span-recording wrapper."""
     orig = getattr(owner, attr)
 
     @functools.wraps(orig)
@@ -159,12 +169,10 @@ def _wrap(tracer: Tracer, owner, attr: str, name: str, outermost: bool = False,
             return out
 
     setattr(owner, attr, wrapper)
-    return lambda: setattr(owner, attr, orig)
 
 
-def install(tracer: Tracer) -> list:
-    """Wrap every traced public function; returns the undo callbacks.
-    Module attributes imported by name elsewhere (``apply_batch`` and
+def install(tracer: Tracer) -> None:
+    """Wrap every traced public function.  Module attributes imported by name elsewhere (``apply_batch`` and
     ``write_lineage`` inside ``streaming.ingest``) are wrapped there too."""
     from cfe_39_spark.operators import cdc
     from cfe_39_spark.sources import fs, table
@@ -174,21 +182,18 @@ def install(tracer: Tracer) -> list:
         sp.attrs.update(events=res.events_in, rows=res.rows_applied,
                         strategy=res.lww_strategy_used, noop=res.noop)
 
-    undo = []
     for owner in (cdc, ingest):
-        undo.append(_wrap(tracer, owner, "apply_batch", "cdc", jobs=True,
-                          on_result=apply_result))
+        _wrap(tracer, owner, "apply_batch", "cdc", jobs=True, on_result=apply_result)
     for owner in (lineage, ingest):
-        undo.append(_wrap(tracer, owner, "write_lineage", "lineage"))
-    undo.append(_wrap(tracer, ingest, "run_stream", "ingest", jobs=True, callback_root=True))
+        _wrap(tracer, owner, "write_lineage", "lineage")
+    _wrap(tracer, ingest, "run_stream", "ingest", jobs=True, callback_root=True)
     ST = table.SequenceTable
-    undo.append(_wrap(tracer, ST, "compact", "compact", jobs=True))
+    _wrap(tracer, ST, "compact", "compact", jobs=True)
     for attr, name in (("commit", "commit"), ("commit_rebase", "commit"),
                        ("find_batch", "find_batch"), ("snapshot", "snapshot")):
-        undo.append(_wrap(tracer, ST, attr, name, outermost=True))
+        _wrap(tracer, ST, attr, name, outermost=True)
     for attr in ("write_atomic", "write_json_atomic", "append_line"):
-        undo.append(_wrap(tracer, fs, attr, "fs", outermost=True))
-    return undo
+        _wrap(tracer, fs, attr, "fs", outermost=True)
 
 
 # --------------------------------------------------------------------- #

@@ -1,15 +1,17 @@
 """The benchmark's workloads.  Each drives the engine only through its
 public API (``cfe_39_spark.operators.cdc``, ``streaming.ingest``,
-``sources.table``) in three steps: ``setup`` (pre-population and warm-up),
+``sources.table``) in four steps: ``inputs`` (generated or cached, no
+Spark needed, so it runs while the session starts), ``setup``
+(pre-population and warm-up),
 ``measure`` (``--seconds`` of work: an ingest phase, then a read phase)
 and ``check`` (the oracle comparison, untimed).
 
 The ingest phase is a fixed amount of work sized to about INGEST_SHARE
-of the seconds.  The read phase then runs READ_MIX (point lookups,
-key-range scans, the full training read, the change feed and the net
-changelog) over the table the ingest phase left, merge-on-read deltas
-outstanding; it takes about the rest of the seconds.  Every workload
-reports the same metrics.
+of the seconds.  In bulk_backfill a read phase then runs READ_MIX (point
+lookups, key-range scans, the full training read, the change feed and the
+net changelog) over the table the ingest phase left, merge-on-read deltas
+outstanding; trickle_hot has no read phase.  Every workload reports the
+same end-to-end metrics.
 
 Engine functions are always called through their module
 (``cdc.apply_batch``), so the tracer's wrappers see every call.
@@ -42,8 +44,16 @@ PREPARE_REPS = 3  # set-up repetitions whose median enters setup_s
 INGEST_SHARE = 0.6  # of --seconds: the ingest phase's nominal length
 LOOKUP_KEYS = 10
 # the read phase: (kind, calls); each call of a kind is one sample
-READ_MIX = (("lookup", 3), ("range", 1), ("scan", 2), ("feed", 3), ("changelog", 1))
+READ_MIX = (("lookup", 1), ("range", 1), ("scan", 1), ("feed", 1), ("changelog", 1))
 READ_KINDS = tuple(kind for kind, _ in READ_MIX)
+
+# apply_batch compacts a bucket once it holds this many deltas (its
+# default compact_threshold when this benchmark was defined); trickle_hot's
+# table is pre-populated so that measured trigger COMPACT_ON crosses it.
+# Kept constant, so every commit gets the same pre-population and a change
+# of the compaction policy shows in the measured triggers.
+COMPACT_THRESHOLD = 16
+COMPACT_ON = 2
 
 # Sizes per workload; 'tiny' is the smoke test's.
 SIZES = {
@@ -51,16 +61,18 @@ SIZES = {
     # benchmark was defined; fixes the trigger count for a run length, so
     # every run (and every commit) ingests the same log.
     "bulk_backfill": {
-        "full": dict(n_docs=50_000, trigger=24_000, warm=4_000, trigger_s=2.8),
+        "full": dict(n_docs=50_000, trigger=100_000, warm=4_000, trigger_s=5.5),
         "tiny": dict(n_docs=2_000, trigger=1_600, warm=400, trigger_s=2.8),
     },
     "trickle_hot": {
-        # period_s: the open loop's publish interval, about half the small-
-        # trigger capacity of the engine on a 4-core host when this
-        # benchmark was defined.  Kept constant so later commits are
-        # measured at the same offered rate.
-        "full": dict(n_docs=5_000, segment=10_000, period_s=3.0, warm=4_000),
-        "tiny": dict(n_docs=1_000, segment=800, period_s=2.0, warm=400),
+        # period_s: the open loop's publish interval.  Twice the median
+        # trigger time of a 10k-event hot segment on a 4-core host when
+        # this benchmark was defined (perfbench/METRICS.md), so the offered
+        # rate is about half the engine's small-trigger capacity.  Kept
+        # constant so later commits are measured at the same offered rate.
+        # pre: events per pre-population segment.
+        "full": dict(n_docs=5_000, segment=10_000, period_s=3.6, pre=800),
+        "tiny": dict(n_docs=1_000, segment=800, period_s=2.0, pre=400),
     },
 }
 
@@ -151,7 +163,12 @@ class Workload:
         self.read_facts: dict[str, list] = {"delta_files": [], "hits": []}
         self.metrics: dict[str, tuple[float, str]] = {}
         self.read_p50: dict[str, float] = {}
+        self.fresh: list[float] = []  # freshness of each measured trigger or segment
         self.live_bytes = 0
+
+    def inputs(self) -> None:
+        """Generate (or find in the cache) every input file of the run."""
+        raise NotImplementedError
 
     def setup(self) -> dict[str, float]:
         """Pre-populate and warm up; returns the set-up seconds spent after
@@ -220,11 +237,12 @@ class Workload:
         scans, the full training read, the change feed and the net
         changelog of the last commit."""
         spark, t, n_docs = self.ctx.spark, self.table, self.ctx.cfg["n_docs"]
-        sid = t.latest_snapshot_id()
+        with self.ctx.tracer.quiet():
+            sid = t.latest_snapshot_id()
+            self.read_facts["delta_files"].append(sum(t.delta_file_counts().values()))
         prev = sid - 1
         rng = np.random.default_rng([self.ctx.seed, 1 << 20])
         os.sync()  # the ingest phase's writeback must not land on the reads
-        self.read_facts["delta_files"].append(sum(t.delta_file_counts().values()))
         for kind, calls in READ_MIX:
             for _ in range(calls):
                 if kind == "lookup":
@@ -253,37 +271,43 @@ class Workload:
         """End-to-end metrics (everything but the post-check ones).  The
         read latencies go to ``read_p50`` (the result record), not to the
         gated metrics: on a shared 4-core host their run-to-run spread
-        exceeds any usable bound."""
+        exceeds any usable bound.  A trigger's wall time includes the
+        compaction ``apply_batch`` runs after its commit, so a compaction
+        stall counts in ``ingest_events_per_s``."""
         walls = [t["wall"] for t in self.triggers]
-        fresh = self.freshness()
+        fresh = self.fresh = self.freshness()
         m = self.metrics
         m["ingest_events_per_s"] = (sum(t["events"] for t in self.triggers) / sum(walls), "ev/s")
         m["trigger_p50_s"] = (pct(walls, 50), "s")
         m["freshness_p50_s"] = (pct(fresh, 50), "s")
-        self.read_p50 = {f"{k}_p50_s": pct(v, 50) for k, v in self.reads.items()}
+        self.read_p50 = {f"{k}_p50_s": pct(v, 50) for k, v in self.reads.items() if v}
         return m
 
     def check(self) -> None:
         """Final state and every lookup against the oracle."""
         ctx = self.ctx
+        by_prefix: dict[int, list] = {}
+        for n_applied, keys, rows in self.lookups:
+            by_prefix.setdefault(n_applied, []).append((keys, rows))
         oracle = Oracle(self.initial, self.segments, ctx.threads)
         try:
             verify_table(ctx, self.table, oracle, f"{self.name} final state")
             self.live_bytes = oracle.live_bytes()
             self.metrics["bytes_per_live_byte"] = (dir_bytes(self.table.root) / self.live_bytes,
                                                    "ratio")
+            self._check_lookups(oracle, len(self.segments), by_prefix.pop(len(self.segments), []))
         finally:
             oracle.close()
-        by_prefix: dict[int, list] = {}
-        for n_applied, keys, rows in self.lookups:
-            by_prefix.setdefault(n_applied, []).append((keys, rows))
         for n_applied, checks in by_prefix.items():
             oracle = Oracle(self.initial, self.segments[:n_applied], ctx.threads)
             try:
-                for keys, rows in checks:
-                    ctx.check(f"lookup after {n_applied} segments", oracle.compare_rows(keys, rows))
+                self._check_lookups(oracle, n_applied, checks)
             finally:
                 oracle.close()
+
+    def _check_lookups(self, oracle: Oracle, n_applied: int, checks: list) -> None:
+        for keys, rows in checks:
+            self.ctx.check(f"lookup after {n_applied} segments", oracle.compare_rows(keys, rows))
 
 
 class BulkBackfill(Workload):
@@ -295,13 +319,17 @@ class BulkBackfill(Workload):
         c = self.ctx.cfg
         return self.ctx.cache.segment(k, c["trigger"], c["n_docs"], "uniform")
 
-    def setup(self) -> dict[str, float]:
-        ctx, c = self.ctx, self.ctx.cfg
-        warm = [ctx.cache.segment(k, c["warm"], c["n_docs"], "uniform") for k in range(2)]
+    def inputs(self) -> None:
+        c = self.ctx.cfg
+        self.warm = [self.ctx.cache.segment(k, c["warm"], c["n_docs"], "uniform")
+                     for k in range(2)]
         for k in range(self.n_triggers()):
             self._segment(k)
+
+    def setup(self) -> dict[str, float]:
+        ctx = self.ctx
         t = time.perf_counter()
-        self._warm_up(warm)
+        self._warm_up(self.warm)
         warm = time.perf_counter() - t
         self.table, prep = _median_prepare(lambda r: ctx.create(f"bulk{r}"))
         return {"warm_up_s": warm, "prepare_s": prep}
@@ -318,9 +346,14 @@ class BulkBackfill(Workload):
 
 class TrickleHot(Workload):
     """Open loop: hot-key segments published on a fixed schedule into a
-    watched directory, tailed by ``run_stream`` in continuous mode."""
+    watched directory, tailed by ``run_stream`` in continuous mode, into a
+    pre-populated table whose buckets cross the compaction threshold on
+    measured trigger COMPACT_ON."""
 
     name = "trickle_hot"
+    # pre-population triggers: with the stream's start-up trigger, each
+    # bucket holds COMPACT_THRESHOLD - COMPACT_ON deltas when measuring starts
+    N_PRE = COMPACT_THRESHOLD - 1 - COMPACT_ON
 
     def __init__(self, ctx: Ctx):
         super().__init__(ctx)
@@ -331,12 +364,17 @@ class TrickleHot(Workload):
         self.applies: list[dict] = []  # every apply_batch the stream made
         self.published: list[tuple[float, float, int]] = []  # (due, actual, max offset)
         self.ingest_facts: dict[str, float] = {}
-        self._undo = None
-        self.k_max = max(2, round(ctx.seconds * INGEST_SHARE / ctx.cfg["period_s"]))
+        self.k_max = max(COMPACT_ON + 1,
+                         round(ctx.seconds * INGEST_SHARE / ctx.cfg["period_s"]))
+        self.base = self.N_PRE * ctx.cfg["pre"]  # offsets of the stream's log start here
+
+    def _pre_segment(self, k: int) -> str:
+        c = self.ctx.cfg
+        return self.ctx.cache.segment(k, c["pre"], c["n_docs"], "hot")
 
     def _segment(self, k: int) -> str:
         c = self.ctx.cfg
-        return self.ctx.cache.segment(k, c["segment"], c["n_docs"], "hot")
+        return self.ctx.cache.segment(k, c["segment"], c["n_docs"], "hot", base=self.base)
 
     def _publish(self, k: int) -> None:
         """Atomic publish: copy into staging, then rename into the watched dir."""
@@ -346,33 +384,40 @@ class TrickleHot(Workload):
         self.segments.append(self._segment(k))
 
     def _record_applies(self) -> None:
-        """Time every trigger of the stream (an end-to-end measurement, so
-        it is on in untraced runs too)."""
+        """Time every trigger of the stream and note the highest offset it
+        committed (an end-to-end measurement, so it is on in untraced runs
+        too)."""
         orig = ingest.apply_batch
 
         def timed_apply(*args, **kwargs):
             phase, t0 = self.ctx.tracer.phase, time.time()
             res = orig(*args, **kwargs)
-            self.applies.append(dict(start=t0, end=time.time(), sid=res.snapshot_id,
-                                     events=res.events_in, phase=phase))
+            self.applies.append(dict(
+                start=t0, end=time.time(), sid=res.snapshot_id, events=res.events_in,
+                phase=phase, max_offset=max((p["max_offset"] for p in res.per_partition),
+                                            default=-1)))
             return res
 
         ingest.apply_batch = timed_apply
-        self._undo = lambda: setattr(ingest, "apply_batch", orig)
+
+    def inputs(self) -> None:
+        c = self.ctx.cfg
+        self.initial = self.ctx.cache.initial(c["n_docs"])
+        self.pre = [self._pre_segment(k) for k in range(self.N_PRE)]
+        for k in range(self.k_max + 1):
+            self._segment(k)
 
     def setup(self) -> dict[str, float]:
         ctx = self.ctx
-        c = ctx.cfg
-        self.initial = ctx.cache.initial(c["n_docs"])
-        for k in range(self.k_max + 1):
-            self._segment(k)
-        warm = [ctx.cache.segment(k, c["warm"], c["n_docs"], "hot") for k in range(2)]
         os.makedirs(self.watch)
         os.makedirs(self.staging)
-        t = time.perf_counter()
-        self._warm_up(warm)
-        warm = time.perf_counter() - t
         self.table, prep = _median_prepare(lambda r: ctx.create(f"trickle{r}", self.initial))
+        # pre-population, which also warms the JIT up (this workload makes
+        # no reads): N_PRE small triggers leave N_PRE deltas in every bucket
+        t = time.perf_counter()
+        for k, seg in enumerate(self.pre):
+            self._apply(seg, f"pre-{k}")
+        warm = time.perf_counter() - t
         # stream start-up, drained on segment 0
         t = time.perf_counter()
         self._record_applies()
@@ -380,6 +425,8 @@ class TrickleHot(Workload):
         self.thread = threading.Thread(target=self._run_stream, name="run_stream")
         self.thread.start()
         self._wait_covered(self._max_offset(0), timeout=120)
+        with ctx.tracer.quiet():
+            self.ingest_facts["delta_files_at_start"] = sum(self.table.delta_file_counts().values())
         return {"warm_up_s": warm, "prepare_s": prep, "stream_start_s": time.perf_counter() - t}
 
     def _run_stream(self) -> None:
@@ -391,15 +438,14 @@ class TrickleHot(Workload):
             self.stream_error.append(e)
 
     def _max_offset(self, k: int) -> int:
-        return (k + 1) * self.ctx.cfg["segment"] - 1
-
-    def _covered(self) -> int:
-        lin = (self.table.snapshot().get("lineage") or {}).get("per_partition") or []
-        return max((p["max_offset"] for p in lin), default=-1)
+        return self.base + (k + 1) * self.ctx.cfg["segment"] - 1
 
     def _wait_covered(self, offset: int, timeout: float) -> None:
+        """Wait until a trigger that committed ``offset`` has returned (its
+        compaction included), from the benchmark's own records of the
+        stream's triggers, so the engine sees no calls from this thread."""
         deadline = time.monotonic() + timeout
-        while self._covered() < offset:
+        while max((a["max_offset"] for a in self.applies), default=-1) < offset:
             if self.stream_error or not self.thread.is_alive():
                 raise RuntimeError("the ingest stream stopped") from (
                     self.stream_error[0] if self.stream_error else None)
@@ -424,7 +470,6 @@ class TrickleHot(Workload):
             self.stop()
         self.triggers = [dict(wall=a["end"] - a["start"], events=a["events"], sid=a["sid"])
                          for a in self.applies if a["phase"] == "measure"]
-        self.read_phase()
 
     def stop(self) -> None:
         """Stop the stream and wait for its thread; idempotent."""
@@ -435,9 +480,6 @@ class TrickleHot(Workload):
             if self.thread.is_alive():
                 raise RuntimeError("run_stream did not stop")
             self.thread = None
-        if self._undo is not None:
-            self._undo()
-            self._undo = None
         if self.stream_error:
             raise RuntimeError("the ingest stream failed") from self.stream_error[0]
 
@@ -458,11 +500,11 @@ class TrickleHot(Workload):
         for i, (_due, actual, _off) in enumerate(self.published):
             done = sum(1 for at, _c, _s in commit_of if at <= actual)
             backlog = max(backlog, (i + 1 - done) * self.ctx.cfg["segment"])
-        self.ingest_facts = {
-            "queue_wait_s": pct(wait, 50),
-            "backlog_max_events": backlog,
-            "generator_late_s": max(a - d for d, a, _ in self.published),
-        }
+        self.ingest_facts.update(
+            queue_wait_s=pct(wait, 50),
+            backlog_max_events=backlog,
+            generator_late_s=max(a - d for d, a, _ in self.published),
+        )
         return fresh
 
 
