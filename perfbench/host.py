@@ -30,6 +30,34 @@ def cpu_ticks() -> tuple[int, int]:
     return sum(fields[:8]), fields[7]
 
 
+def wait_quiet(max_steal: float, max_wait_s: float,
+               probe_s: float = 1.0) -> tuple[float, float, float]:
+    """Wait until the machine's neighbours leave it its CPUs: probe until
+    the stolen share of one probe's CPU time is at most ``max_steal``, or
+    ``max_wait_s`` has passed.  Steal only accrues while a virtual CPU has
+    work, so each probe keeps every CPU busy (a multi-threaded matrix
+    product) for ``probe_s``.  Returns (seconds waited, the last probe's
+    stolen share, its matrix products per second)."""
+    import numpy as np
+
+    a = np.random.default_rng(0).random((1000, 1000))
+    t0 = time.monotonic()
+    while True:
+        all0, stolen0 = cpu_ticks()
+        start = time.monotonic()
+        n = 0
+        while time.monotonic() < start + probe_s:
+            a @ a
+            n += 1
+        rate = n / (time.monotonic() - start)
+        all1, stolen1 = cpu_ticks()
+        frac = (stolen1 - stolen0) / max(all1 - all0, 1)
+        waited = time.monotonic() - t0
+        if frac <= max_steal or waited >= max_wait_s:
+            return waited, frac, rate
+        time.sleep(1.0)
+
+
 def parse_mb(size: str) -> int:
     m = re.fullmatch(r"(\d+)([gGmM])", size)
     if not m:

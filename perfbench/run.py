@@ -41,6 +41,11 @@ RESERVE_MB = 1536  # Python driver, DuckDB oracle and page cache besides the hea
 # checkout sits on a RAM-backed file system (tmpfs such as /dev/shm).
 DATA_MB = {"bulk_backfill": 2000, "trickle_hot": 600}
 HELD_OUT_SEED = 90210  # never used while tuning; validate claimed gains on it
+# The measured phase starts once the hypervisor steals at most QUIET_STEAL
+# of the machine's CPU time (or after QUIET_WAIT_S): a neighbour's busy
+# spell halves the speed of small Spark jobs for a minute or more.
+QUIET_STEAL = 0.03
+QUIET_WAIT_S = 20.0
 
 
 def parse_args(argv):
@@ -130,7 +135,7 @@ def measure(args, run_dir: str, trace: bool):
     workload, its context, the tracer, the end-to-end metrics, the phase
     walls, the measured window and the metadata bytes written in it."""
     from cfe_39_spark.session import get_spark
-    from host import cpu_ticks, dir_bytes, nproc, peak_rss_mb
+    from host import cpu_ticks, dir_bytes, nproc, peak_rss_mb, wait_quiet
     from spans import Tracer, install
     from workloads import WORKLOADS, Ctx
 
@@ -161,6 +166,8 @@ def measure(args, run_dir: str, trace: bool):
         setup_s = sum(parts.values())
         phases.update(parts, setup_wall_s=time.perf_counter() - t0)
 
+        (phases["quiet_wait_s"], phases["quiet_steal_frac"],
+         phases["quiet_probe_rate"]) = wait_quiet(QUIET_STEAL, QUIET_WAIT_S)
         meta_dir = os.path.join(wl.table.root, "metadata")
         meta0 = dir_bytes(meta_dir)
         os.sync()  # set-up's writeback must not land on the measured phase

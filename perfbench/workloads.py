@@ -7,11 +7,12 @@ Spark needed, so it runs while the session starts), ``setup``
 and ``check`` (the oracle comparison, untimed).
 
 The ingest phase is a fixed amount of work sized to about INGEST_SHARE
-of the seconds.  In bulk_backfill a read phase then runs READ_MIX (point
-lookups, key-range scans, the full training read, the change feed and the
-net changelog) over the table the ingest phase left, merge-on-read deltas
-outstanding; trickle_hot has no read phase.  Every workload reports the
-same end-to-end metrics.
+of the seconds on bulk_backfill and to all of them on trickle_hot.  In
+bulk_backfill a read phase then runs READ_MIX (point lookups, key-range
+scans, the full training read, the change feed and the net changelog)
+over the table the ingest phase left, merge-on-read deltas outstanding;
+trickle_hot has no read phase.  Every workload reports the same
+end-to-end metrics.
 
 Engine functions are always called through their module
 (``cdc.apply_batch``), so the tracer's wrappers see every call.
@@ -41,7 +42,7 @@ from oracle import Oracle
 PARTS = list(range(N_PARTITIONS))
 N_BUCKETS = 8
 PREPARE_REPS = 3  # set-up repetitions whose median enters setup_s
-INGEST_SHARE = 0.6  # of --seconds: the ingest phase's nominal length
+INGEST_SHARE = 0.6  # of --seconds: bulk_backfill's ingest phase's nominal length
 LOOKUP_KEYS = 10
 # the read phase: (kind, calls); each call of a kind is one sample
 READ_MIX = (("lookup", 1), ("range", 1), ("scan", 1), ("feed", 1), ("changelog", 1))
@@ -51,9 +52,14 @@ READ_KINDS = tuple(kind for kind, _ in READ_MIX)
 # default compact_threshold when this benchmark was defined); trickle_hot's
 # table is pre-populated so that measured trigger COMPACT_ON crosses it.
 # Kept constant, so every commit gets the same pre-population and a change
-# of the compaction policy shows in the measured triggers.
+# of the compaction policy shows in the measured triggers.  The first
+# measured trigger compacts: the triggers before a compaction (more deltas
+# per bucket to merge) are slower than those after it, and the medians
+# must not straddle the two.  AFTER_COMPACT segments follow it; the stall
+# shows in the next one's freshness.
 COMPACT_THRESHOLD = 16
-COMPACT_ON = 2
+COMPACT_ON = 1
+AFTER_COMPACT = 3
 
 # Sizes per workload; 'tiny' is the smoke test's.
 SIZES = {
@@ -65,11 +71,10 @@ SIZES = {
         "tiny": dict(n_docs=2_000, trigger=1_600, warm=400, trigger_s=2.8),
     },
     "trickle_hot": {
-        # period_s: the open loop's publish interval.  Twice the median
-        # trigger time of a 10k-event hot segment on a 4-core host when
-        # this benchmark was defined (perfbench/METRICS.md), so the offered
-        # rate is about half the engine's small-trigger capacity.  Kept
-        # constant so later commits are measured at the same offered rate.
+        # period_s: the open loop's publish interval, 40-50% of the
+        # engine's small-trigger capacity on a 4-core host when this
+        # benchmark was defined (perfbench/METRICS.md).  Kept constant so
+        # later commits are measured at the same offered rate.
         # pre: events per pre-population segment.
         "full": dict(n_docs=5_000, segment=10_000, period_s=3.6, pre=800),
         "tiny": dict(n_docs=1_000, segment=800, period_s=2.0, pre=400),
@@ -364,8 +369,7 @@ class TrickleHot(Workload):
         self.applies: list[dict] = []  # every apply_batch the stream made
         self.published: list[tuple[float, float, int]] = []  # (due, actual, max offset)
         self.ingest_facts: dict[str, float] = {}
-        self.k_max = max(COMPACT_ON + 1,
-                         round(ctx.seconds * INGEST_SHARE / ctx.cfg["period_s"]))
+        self.k_max = max(COMPACT_ON + AFTER_COMPACT, round(ctx.seconds / ctx.cfg["period_s"]))
         self.base = self.N_PRE * ctx.cfg["pre"]  # offsets of the stream's log start here
 
     def _pre_segment(self, k: int) -> str:
